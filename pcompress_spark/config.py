@@ -69,9 +69,7 @@ class DedupConfig:
     # --- determinism ---
     seed: int = 42
 
-    # --- execution tuning (local sandbox defaults; scale notes in docstrings) ---
-    shuffle_partitions: int = 32
-    arrow_batch_rows: int = 2048  # bound UDF working-set memory
+    # --- execution tuning (shuffle/Arrow sizing is session config: get_spark) ---
     cc_max_iters: int = 50        # connected-components fixpoint guard
     # Edge sets at or below this ride a driver union-find (16 B/edge ->
     # 32 MB at the default, the same order as what a broadcast join ships

@@ -82,19 +82,10 @@ class DedupPipeline:
         spark: SparkSession,
         cfg: DedupConfig | None = None,
         work_dir: str | None = None,
-        auto_plan: bool = False,
     ) -> None:
-        """auto_plan: derive shuffle_partitions / arrow_batch_rows /
-        bucket_cap / banding pass count from input stats at run() time
-        (planner.derive_exec_plan — the reference's memory-budgeted index
-        auto-configuration, /root/reference/rabin/global/index.c:119-215)
-        and log the decision to metrics.json. Off by default: an explicit
-        cfg always means exactly what it says."""
         self.spark = spark
         self.cfg = cfg or DedupConfig()
         self.work_dir = work_dir
-        self.auto_plan = auto_plan
-        self.exec_plan = None
         self._stages: list[StageResult] = []
         self._input_fp: str | None = None
 
@@ -305,36 +296,6 @@ class DedupPipeline:
             except (OSError, json.JSONDecodeError):
                 pass
 
-        band_passes = 1
-        if self.auto_plan:
-            import dataclasses
-
-            from .planner import derive_exec_plan
-
-            # unit_col: transcripts is TURN-level; plan budgets are per
-            # conversation (the row the UDF/banding stages actually see)
-            plan = derive_exec_plan(self.spark, transcripts, cfg.bands,
-                                    cores=wg["width"], unit_col="conv_id")
-            self.exec_plan = plan
-            cfg = dataclasses.replace(
-                cfg,
-                bucket_cap=plan.bucket_cap,
-                shuffle_partitions=plan.shuffle_partitions,
-                arrow_batch_rows=plan.arrow_batch_rows,
-            )
-            self.cfg = cfg  # manifests/resume key on the DERIVED config
-            if wg["width"] >= wg["session_width"]:
-                # a width-capped run keeps shuffle partitions at the capped
-                # width (set in run()); the plan's value still governs the
-                # cluster-scale config and is logged either way
-                self.spark.conf.set(
-                    "spark.sql.shuffle.partitions",
-                    str(plan.shuffle_partitions))
-            self.spark.conf.set(
-                "spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(plan.arrow_batch_rows))
-            band_passes = plan.band_passes
-
         # uncapped: 2 waves at full width for load balancing (status quo).
         # capped: exactly `width` partitions — any more and local mode would
         # schedule past the measured knee (slots > effective cores).
@@ -345,50 +306,7 @@ class DedupPipeline:
         asm = assemble(transcripts, parallelism=par)
         sig = self._run_stage("signatures", lambda: compute_signatures(asm, cfg))
 
-        if band_passes > 1:
-            from .planner import band_ranges
-
-            # each pass is MATERIALIZED (stage checkpoint / eager
-            # localCheckpoint) before the next is constructed — a lazy
-            # union would fuse all passes into one job whose in-flight
-            # exploded-band footprint is the single-pass total, defeating
-            # the very budget band_passes was derived to enforce. The
-            # final candidates stage unions the materialized pass outputs
-            # (pair rows only) and combines n_bands.
-            pass_frames, pass_stats = [], []
-            for i, rng in enumerate(band_ranges(cfg.bands, band_passes)):
-                holder: dict = {}
-
-                def _build(rng=rng, holder=holder):
-                    df, st = candidate_pairs(sig, cfg, band_range=rng)
-                    holder["stats"] = st
-                    return df
-
-                pass_frames.append(
-                    self._run_stage(f"candidates_p{i}", _build))
-                pass_stats.append(holder.get("stats"))
-            cand_df = pass_frames[0]
-            for p in pass_frames[1:]:
-                cand_df = cand_df.unionByName(p)
-            cand_df = cand_df.groupBy("ih_a", "ih_b").agg(
-                F.sum("n_bands").cast("int").alias("n_bands")
-            )
-            if all(s is not None for s in pass_stats):
-                all_stats = pass_stats[0]
-                for s in pass_stats[1:]:
-                    all_stats = all_stats.unionByName(s)
-                bucket_stats = all_stats.select(
-                    F.sum("n_buckets").alias("n_buckets"),
-                    F.sum("n_hot_buckets").alias("n_hot_buckets"),
-                    F.sum("hot_member_rows").alias("hot_member_rows"),
-                    F.max("max_bucket_size").alias("max_bucket_size"),
-                )
-            else:
-                # >= 1 pass resumed: its stats frame was never built; the
-                # prior run's recorded stats stand (finalize falls back)
-                bucket_stats = None
-        else:
-            cand_df, bucket_stats = candidate_pairs(sig, cfg)
+        cand_df, bucket_stats = candidate_pairs(sig, cfg)
         cand = self._run_stage("candidates", cand_df)
         # exact pair count from the stage manifest (zero extra jobs) drives
         # the verify stage's broadcast-vs-shuffle decision for the pair list
@@ -447,11 +365,9 @@ class DedupPipeline:
             # for numbers the prior run already wrote
             if resumed.get("candidates") and "lsh_buckets" in prior_metrics:
                 lsh_buckets = prior_metrics["lsh_buckets"]
-            elif bucket_stats is not None:
+            else:
                 bucket_row = [r.asDict() for r in bucket_stats.collect()]
                 lsh_buckets = bucket_row[0] if bucket_row else {}
-            else:
-                lsh_buckets = prior_metrics.get("lsh_buckets", {})
             t_bucket = time.monotonic()
             metrics = {
                 "config_hash": cfg.config_hash(),
@@ -479,8 +395,6 @@ class DedupPipeline:
                         .agg(F.count(F.lit(1)).alias("n"))
                         .collect()
                     }
-            if self.exec_plan is not None:
-                metrics["exec_plan"] = self.exec_plan.as_dict()
             metrics["width_guard"] = wg
             t_stats = time.monotonic()
             # lineage derives purely from the signatures/clusters stage
@@ -506,13 +420,3 @@ class DedupPipeline:
             with open(os.path.join(self.work_dir, "metrics.json"), "w") as f:
                 json.dump(metrics, f, indent=2, default=str)
         return result
-
-
-def run_dedup(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    cfg: DedupConfig | None = None,
-    work_dir: str | None = None,
-    auto_plan: bool = False,
-) -> PipelineResult:
-    return DedupPipeline(spark, cfg, work_dir, auto_plan=auto_plan).run(transcripts)

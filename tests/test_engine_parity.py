@@ -134,31 +134,6 @@ def test_substring_matches_oracle(spark, engine_sig, oracle_result):
     assert eng == orc
 
 
-def test_band_pass_splitting_is_semantics_preserving(spark, engine_sig):
-    """band_range sequential passes (the bounded-shuffle knob for extreme
-    scale) must reproduce the single-pass candidate set and n_bands counts
-    exactly: buckets are independent across bands."""
-    import pandas as pd
-    from pcompress_spark.operators.candidates import band_explode, bucket_members
-    from pyspark.sql import functions as F
-
-    whole, _ = candidate_pairs(engine_sig, CFG)
-    whole = whole.toPandas().set_index(["ih_a", "ih_b"]).sort_index()
-
-    step = CFG.bands // 4
-    parts = []
-    for lo in range(0, CFG.bands, step):
-        banded = band_explode(engine_sig, CFG, band_range=(lo, lo + step))
-        buckets, _ = bucket_members(banded, CFG, persist_sizes=False)
-        from pcompress_spark.operators.candidates import bucket_pairs
-        pairs = bucket_pairs(buckets, "ih_a", "ih_b")
-        parts.append(pairs.groupBy("ih_a", "ih_b").agg(
-            F.count(F.lit(1)).cast("int").alias("n_bands")).toPandas())
-    merged = (pd.concat(parts).groupby(["ih_a", "ih_b"])["n_bands"]
-              .sum().astype("int32").to_frame().sort_index())
-    assert merged["n_bands"].to_dict() == whole["n_bands"].to_dict()
-
-
 def test_bucket_members_min_size_keeps_singletons(spark):
     """min_size=1 (bipartite probe indexes) keeps single-member buckets
     that the self-join default (2) drops; cap/salt behavior is otherwise

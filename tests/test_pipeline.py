@@ -6,6 +6,7 @@ import shutil
 
 import pytest
 
+from pcompress_spark import oracle
 from pcompress_spark.config import DedupConfig
 from pcompress_spark.pipeline import DedupPipeline
 
@@ -17,7 +18,7 @@ def _clusters_dict(res):
     return dict(zip(pdf["conv_id"], pdf["cluster_id"]))
 
 
-def test_pipeline_end_to_end(spark, smoke_transcripts, tmp_path):
+def test_pipeline_end_to_end(spark, smoke_transcripts, smoke_data, tmp_path):
     wd = str(tmp_path / "run1")
     os.makedirs(wd)
     res = DedupPipeline(spark, CFG, work_dir=wd).run(smoke_transcripts)
@@ -35,6 +36,13 @@ def test_pipeline_end_to_end(spark, smoke_transcripts, tmp_path):
     lineage = spark.read.parquet(os.path.join(wd, "lineage")).toPandas()
     assert set(lineage["stage"]) == {"signatures", "clusters"}
     assert lineage["rows"].sum() > 0
+    # the full pipeline's pair set equals the oracle's, match kinds included
+    orc = oracle.run(smoke_data.transcripts, CFG)
+    eng = res.tables["pairs"].toPandas()
+    eng_set = set(zip(eng["conv_id_a"], eng["conv_id_b"], eng["match_kind"]))
+    orc_set = set(zip(orc.pairs["conv_id_a"], orc.pairs["conv_id_b"],
+                      orc.pairs["match_kind"]))
+    assert eng_set == orc_set
 
     # full resume: every stage skipped, identical clusters
     res2 = DedupPipeline(spark, CFG, work_dir=wd).run(smoke_transcripts)

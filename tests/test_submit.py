@@ -48,7 +48,10 @@ def test_pyfiles_zip_reproducible(tmp_path):
 
 def test_run_pipeline_script_end_to_end(tmp_path, smoke_data):
     """tools/run_pipeline.py (the spark-submit entry) runs the full pipeline
-    from the CLI — including the --tiers table — and reports cluster rows."""
+    from the CLI — including the --tiers table and a --config-json override
+    that reaches the manifests — and reports cluster rows."""
+    from pcompress_spark.config import DedupConfig
+
     inp = str(tmp_path / "transcripts.parquet")
     smoke_data.transcripts.to_parquet(inp, index=False)
     env = dict(os.environ, SPARK_GRAFT_CPUS="4", SPARK_GRAFT_DRIVER_MEM="4g")
@@ -56,7 +59,8 @@ def test_run_pipeline_script_end_to_end(tmp_path, smoke_data):
         [sys.executable, os.path.join(REPO, "tools", "run_pipeline.py"),
          "--input", inp, "--work-dir", str(tmp_path / "wd"),
          "--output", str(tmp_path / "out"), "--master", "local[4]",
-         "--shuffle-partitions", "4", "--tiers"],
+         "--shuffle-partitions", "4", "--tiers",
+         "--config-json", '{"bucket_cap": 128}'],
         capture_output=True, text=True, timeout=600, cwd=REPO, env=env,
     )
     assert out.returncode == 0, out.stderr[-3000:]
@@ -65,27 +69,9 @@ def test_run_pipeline_script_end_to_end(tmp_path, smoke_data):
     assert os.path.exists(tmp_path / "out" / "clusters")
     assert os.path.exists(tmp_path / "out" / "tiers")
     with open(tmp_path / "wd" / "metrics.json") as f:
-        tiers = json.load(f)["tiers"]
-    assert sum(tiers.values()) == res["clusters_rows"]
-
-
-def test_run_pipeline_auto_plan_flag(tmp_path, smoke_data):
-    """--auto-plan derives and logs execution parameters from the CLI
-    (exec_plan lands in metrics.json with file-backed byte stats)."""
-    inp = str(tmp_path / "transcripts.parquet")
-    smoke_data.transcripts.to_parquet(inp, index=False)
-    env = dict(os.environ, SPARK_GRAFT_CPUS="4", SPARK_GRAFT_DRIVER_MEM="4g")
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "tools", "run_pipeline.py"),
-         "--input", inp, "--work-dir", str(tmp_path / "wd"),
-         "--master", "local[4]", "--auto-plan"],
-        capture_output=True, text=True, timeout=600, cwd=REPO, env=env,
-    )
-    assert out.returncode == 0, out.stderr[-3000:]
-    with open(tmp_path / "wd" / "metrics.json") as f:
-        plan = json.load(f)["exec_plan"]
-    assert plan["input_bytes"] > 0 and plan["input_rows"] > 0
-    assert plan["bucket_cap"] in (128, 256, 1024)
+        metrics = json.load(f)
+    assert sum(metrics["tiers"].values()) == res["clusters_rows"]
+    assert metrics["config_hash"] == DedupConfig(bucket_cap=128).config_hash()
 
 
 def test_bench_emits_one_json_line(tmp_path):
