@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.verify import with_exact_jaccard
 from .doc_dedup import ngrams_col
 from .text import materialized_words
 
@@ -422,12 +423,9 @@ def probe_bench_neardup(
     b = bench_sig.select(F.col("id_hash").alias("ih_b"),
                          F.col("conv_id").alias("bench_id"),
                          F.col("shingles").alias("sh_b")).join(bare, "ih_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0))
     near = (
-        a.join(b, ["ih_c", "ih_b"])
-        .select("conv_id", "bench_id", F.round(jac, 6).alias("jaccard"))
+        with_exact_jaccard(a.join(b, ["ih_c", "ih_b"]), "sh_a", "sh_b")
+        .select("conv_id", "bench_id", F.round("jaccard", 6).alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
     ex = (

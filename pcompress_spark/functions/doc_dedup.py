@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 from .. import cache
 from ..config import DedupConfig
 from ..kernels import signatures_for_texts, splitmix64, trim_after
+from ..operators.verify import with_exact_jaccard
 from .text import norm_words
 
 
@@ -176,14 +177,12 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.3) -> 
                  F.col("grams").alias("grams_a"))
     b = g.select(F.col("doc_id").alias("doc_id_b"), F.col("lang").alias("lang_b"),
                  F.col("grams").alias("grams_b"))
-    inter = F.size(F.array_intersect("grams_a", "grams_b"))
-    union = F.size("grams_a") + F.size("grams_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
+    joined = a.join(b, (F.col("lang_a") == F.col("lang_b"))
+                    & (F.col("doc_id_a") < F.col("doc_id_b")))
     return (
-        a.join(b, (F.col("lang_a") == F.col("lang_b"))
-               & (F.col("doc_id_a") < F.col("doc_id_b")))
+        with_exact_jaccard(joined, "grams_a", "grams_b", empty=0.0)
         .select("doc_id_a", "doc_id_b", F.col("lang_a").alias("lang"),
-                F.round(jac, 6).alias("jaccard"))
+                F.round("jaccard", 6).alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
 
@@ -319,12 +318,11 @@ def minhash_lsh_pairs(
     cand = bucket_pairs(buckets, "doc_id_a", "doc_id_b").distinct()
     a = sig.select(F.col("doc_id").alias("doc_id_a"), F.col("shingles").alias("sh_a"))
     b = sig.select(F.col("doc_id").alias("doc_id_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0))
     pairs = (
-        cand.join(a, "doc_id_a").join(b, "doc_id_b")
-        .select("doc_id_a", "doc_id_b", F.round(jac, 6).alias("jaccard"))
+        with_exact_jaccard(
+            cand.join(a, "doc_id_a").join(b, "doc_id_b"), "sh_a", "sh_b"
+        )
+        .select("doc_id_a", "doc_id_b", F.round("jaccard", 6).alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
     return (pairs, stats) if with_stats else pairs
@@ -615,15 +613,12 @@ def recall_report(docs: DataFrame, cfg: DedupConfig | None = None,
                     F.col("shingles").alias("sh_a"))
     b = side.select(F.col("doc_id").alias("doc_id_b"), "lang",
                     F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.round(
-        F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0)), 6
-    )
     truth = (
-        a.join(b, ["lang"])
-        .where(F.col("doc_id_a") < F.col("doc_id_b"))
-        .select("doc_id_a", "doc_id_b", jac.alias("jaccard"))
+        with_exact_jaccard(
+            a.join(b, ["lang"]).where(F.col("doc_id_a") < F.col("doc_id_b")),
+            "sh_a", "sh_b",
+        )
+        .select("doc_id_a", "doc_id_b", F.round("jaccard", 6).alias("jaccard"))
         .where(F.col("jaccard") >= truth_threshold)
     )
     found = truth.join(

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from .. import cache
 from ..config import DedupConfig
 from ..operators.candidates import bucket_members, bucket_pairs
+from ..operators.verify import with_exact_jaccard
 from .doc_dedup import doc_band_explode, doc_signatures
 
 
@@ -114,12 +115,9 @@ def incremental_lsh_pairs(
                        F.col("shingles").alias("sh_a")).join(bare, "doc_id_a")
     b = all_sig.select(F.col("doc_id").alias("doc_id_b"),
                        F.col("shingles").alias("sh_b")).join(bare, "doc_id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0))
     return (
-        a.join(b, ["doc_id_a", "doc_id_b"])
-        .select("doc_id_a", "doc_id_b", F.round(jac, 6).alias("jaccard"))
+        with_exact_jaccard(a.join(b, ["doc_id_a", "doc_id_b"]), "sh_a", "sh_b")
+        .select("doc_id_a", "doc_id_b", F.round("jaccard", 6).alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
 

@@ -14,7 +14,8 @@ that exact geometry in Spark built-ins only:
   bottom-K sketch      array_sort + slice                    (codegen)
   1-of-K candidates    explode(kmv) -> the SHARED salted/capped/LOGGED
                        bucket_members (operators/candidates.py)
-  verify               exact Jaccard via array_intersect     (codegen)
+  verify               exact Jaccard via array_intersect, evaluated once
+                       per pair (operators/verify.with_exact_jaccard)
 
 No MapInPandas, no ArrowEvalPython, no Python worker processes anywhere
 in the plan (plan-checked in PLANS.md). The engine's other near-dup
@@ -62,6 +63,7 @@ from pyspark.sql import functions as F
 
 from .. import cache
 from ..config import DedupConfig
+from ..operators.verify import with_exact_jaccard
 from .text import norm_words
 
 # reference K: sub_intervals = 100 / pct_interval = 20 by default
@@ -164,12 +166,9 @@ def _kmv_pairs(
     b = sig.select(
         F.col(id_col).alias(b_col), F.col("shingles").alias("sh_b")
     ).join(bare, b_col)
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0))
     return (
-        a.join(b, [a_col, b_col])
-        .select(a_col, b_col, F.round(jac, 6).alias("jaccard"))
+        with_exact_jaccard(a.join(b, [a_col, b_col]), "sh_a", "sh_b")
+        .select(a_col, b_col, F.round("jaccard", 6).alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
 
@@ -293,14 +292,11 @@ def kmv_recall_report(
                     F.col("shingles").alias("sh_a"))
     b = side.select(F.col("doc_id").alias("doc_id_b"),
                     F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.round(
-        F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0)), 6
-    )
     truth = (
-        a.join(b, F.col("doc_id_a") < F.col("doc_id_b"))
-        .select("doc_id_a", "doc_id_b", jac.alias("jaccard"))
+        with_exact_jaccard(
+            a.join(b, F.col("doc_id_a") < F.col("doc_id_b")), "sh_a", "sh_b"
+        )
+        .select("doc_id_a", "doc_id_b", F.round("jaccard", 6).alias("jaccard"))
         .where(F.col("jaccard") >= truth_threshold)
     )
     found = truth.join(

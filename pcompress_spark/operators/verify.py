@@ -9,15 +9,30 @@ early when the projected gain is too small ("No Dedupe possible",
 Spark shape: the bare pair list is BROADCAST against the signatures table
 TWICE (one map-side hash join per pair end — no shuffle of the corpus), and
 the two enriched sides then join on the composite (ih_a, ih_b) key, so the
-only exchange in this stage moves O(candidate) rows. Then pure JVM
-expressions:
+only exchange in this stage moves O(candidate) rows. Then JVM expressions,
+no Python:
   - est_jaccard: fraction of agreeing MinHash positions (zip_with +
     aggregate) — the cheap pre-filter (early-abort analog);
   - jaccard: EXACT Jaccard on the sorted-distinct shingle sets
     (array_intersect / sizes) — the memcmp-strength residual;
   - exact: content_hash equality (crypto-hash path).
 
-Everything here is whole-stage-codegen JVM; no Python.
+Single-evaluation rule: every expensive per-pair expression is evaluated
+exactly ONCE per pair. zip_with/aggregate are higher-order functions
+(interpreted, outside whole-stage codegen) and Catalyst does no common-
+subexpression elimination across operators: a filter on an aliased
+expression is substituted into the pushed-down SortMergeJoin condition
+AND into the output projection — filtering on an aliased Jaccard runs
+array_intersect six times per surviving pair (three copies in each
+place). Hence:
+  - the MinHash prefilter and the ch_a != ch_b test are written inline
+    (no alias) and land once, in the join condition;
+  - size(array_intersect) is materialized by with_exact_jaccard behind a
+    one-row explode(array(..)) Generate barrier (the
+    text.materialized_words idiom); the Jaccard and its threshold filter
+    are then cheap arithmetic over that plain `inter` column.
+Every exact-Jaccard verify in the engine (kmv, curation, incremental,
+doc_dedup) routes through with_exact_jaccard for the same reason.
 
 Why the explicit double-broadcast instead of chained joins: the naive
 cand ⋈ sig_a ⋈ sig_b plan makes Spark shuffle + sort the FULL signatures
@@ -87,6 +102,32 @@ def exact_pairs(sig: DataFrame) -> DataFrame:
     )
 
 
+def with_exact_jaccard(
+    df: DataFrame, a: str, b: str, empty: float = 1.0
+) -> DataFrame:
+    """``df`` plus ``inter`` = size(array_intersect(a, b)) and ``jaccard`` =
+    inter / (size(a) + size(b) - inter), ``empty`` when the union is empty.
+    a and b are sorted-distinct array columns (shingle or gram sets).
+
+    ``inter`` is MATERIALIZED per row behind a one-row explode(array(..))
+    Generate barrier, so array_intersect runs exactly once per row however
+    many times ``jaccard`` is referenced downstream: a filter on it cannot
+    be pushed below the Generate (it reads the generator output), and the
+    projection that consumes it reads a plain column. Exploding a
+    one-element array emits exactly one row per input row — value-
+    identical, plan-shape only (module docstring: single-evaluation rule).
+    Callers apply their own rounding and threshold filter to ``jaccard``."""
+    inter = df.select(
+        "*", F.explode(F.array(F.size(F.array_intersect(a, b)))).alias("inter")
+    )
+    union = F.size(a) + F.size(b) - F.col("inter")
+    return inter.withColumn(
+        "jaccard",
+        F.when(union > 0, F.col("inter").cast("double") / union)
+        .otherwise(F.lit(empty)),
+    )
+
+
 def near_pairs(
     sig: DataFrame,
     candidates: DataFrame,
@@ -130,36 +171,28 @@ def near_pairs(
         F.col("shingles").alias("sh_b"),
         F.col("minhash").alias("mh_b"),
     ).join(bare, "ih_b")
-    joined = a_side.join(b_side, ["ih_a", "ih_b"])
-    est = (
-        F.aggregate(
-            F.zip_with("mh_a", "mh_b", lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        )
-        / F.lit(cfg.num_perm)
-    ).alias("est_jaccard")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
+    est = F.aggregate(
+        F.zip_with("mh_a", "mh_b", lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    ) / F.lit(cfg.num_perm)
     # exact-hash pairs are NOT special-cased into the prefilter: equal
     # content_hash implies equal minhash (est = 1.0 passes any floor), and
-    # the final filter drops ch_a == ch_b rows anyway (they belong to
-    # exact_pairs) — a disjunct here would only push doomed rows through
-    # the array_intersect scoring
-    scored = (
-        joined.withColumn("est_jaccard", est)
-        .where(F.col("est_jaccard") >= F.lit(cfg.minhash_prefilter))
-        .withColumn("jaccard_x", jac)
+    # ch_a == ch_b rows are dropped here (they belong to exact_pairs) —
+    # both tests land once, in the join condition, before any shingle
+    # array is intersected
+    joined = a_side.join(b_side, ["ih_a", "ih_b"]).where(
+        (est >= F.lit(cfg.minhash_prefilter))
+        & (F.col("ch_a") != F.col("ch_b"))
+    )
+    scored = with_exact_jaccard(joined, "sh_a", "sh_b").where(
+        F.col("jaccard") >= F.lit(cfg.jaccard_threshold)
     )
     a_first = F.col("cid_a") < F.col("cid_b")
-    return scored.where(
-        (F.col("ch_a") != F.col("ch_b"))
-        & (F.col("jaccard_x") >= F.lit(cfg.jaccard_threshold))
-    ).select(
+    return scored.select(
         F.least("cid_a", "cid_b").alias("conv_id_a"),
         F.greatest("cid_a", "cid_b").alias("conv_id_b"),
-        F.col("jaccard_x").alias("jaccard"),
+        "jaccard",
         F.lit("near").alias("match_kind"),
         F.when(a_first, F.col("ih_a")).otherwise(F.col("ih_b")).alias("ih_a"),
         F.when(a_first, F.col("ih_b")).otherwise(F.col("ih_a")).alias("ih_b"),

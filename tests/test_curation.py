@@ -166,6 +166,38 @@ def test_verify_pairs_broadcasts_pair_list(spark, smoke_transcripts):
         "signature table exchanged on a single pair-end key")
 
 
+def test_verify_scores_each_pair_once(spark, smoke_transcripts, docs):
+    """Each candidate pair is scored once: the executed plans carry ONE
+    array_intersect (and the transcript verify ONE MinHash zip_with). A
+    filter on an aliased Jaccard is otherwise substituted into the join
+    condition and the projection, re-running the intersection per copy."""
+    from pcompress_spark.config import DedupConfig
+    from pcompress_spark.functions import doc_dedup, kmv
+    from pcompress_spark.operators.assemble import assemble
+    from pcompress_spark.operators.candidates import candidate_pairs
+    from pcompress_spark.operators.signatures import compute_signatures
+    from pcompress_spark.operators.verify import verify_pairs
+
+    def executed(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    cfg = DedupConfig()
+    sig = compute_signatures(assemble(smoke_transcripts), cfg)
+    cand, _ = candidate_pairs(sig, cfg, persist_sizes=False)
+    plan = executed(verify_pairs(sig, cand, cfg, cand_rows=100))
+    assert plan.count("array_intersect(") == 1
+    assert plan.count("zip_with(") == 1
+
+    doc_cfg = DedupConfig(shingle_k=3, substring_enabled=False,
+                          jaccard_threshold=0.3)
+    ksig = kmv.kmv_signatures(docs, 3, id_col="doc_id")
+    plan = executed(kmv._kmv_pairs(ksig, doc_cfg, "doc_id", "doc_id_a",
+                                   "doc_id_b", 0.3))
+    assert plan.count("array_intersect(") == 1
+    plan = executed(doc_dedup.minhash_lsh_pairs(docs, doc_cfg, 0.3))
+    assert plan.count("array_intersect(") == 1
+
+
 def test_pack_assignments_watermark_semantics(spark, docs):
     """Every pack's exclusive-start offset is below the budget (a pack only
     closes once it crosses it), packs are contiguous in doc_id order, and

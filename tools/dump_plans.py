@@ -243,6 +243,19 @@ def main() -> None:
         if n_pair_bcast >= 2 and not bad_corpus_exchange
         else "FAIL verify: signature table exchanged on a single pair-end key"
     )
+    # single-evaluation rule (operators/verify.py): the shingle
+    # intersection sits behind a Generate barrier, so the executed plan
+    # carries exactly one copy — a filter on an aliased Jaccard would be
+    # substituted into the join condition and the projection. Counted on
+    # a fresh frame: once `pairs` has run, AQE renders both its final and
+    # its initial plan
+    n_inter = (verify_pairs(sig, cand, cfg)._jdf.queryExecution()
+               .executedPlan().toString().count("array_intersect("))
+    checks.append(
+        "OK verify: array_intersect evaluated once per pair"
+        if n_inter == 1
+        else f"FAIL verify: {n_inter} array_intersect copies in the plan"
+    )
 
     inc_plan = plan_of(inc_pairs_df)
     n_semi_bcast = inc_plan.count("BroadcastHashJoin")
